@@ -64,7 +64,7 @@ def _cpus() -> int:
 
 
 def _environment(work: str) -> None:
-    """Size Spark for this host and keep the files it writes in ``work``.
+    """Size Spark for the machine and keep the files it writes in ``work``.
     Must run before pyspark starts the JVM."""
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)

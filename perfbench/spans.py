@@ -1,5 +1,5 @@
 """Spans around the benchmark's calls into the pipeline, with Spark
-counters read from the driver's status store.
+counters read from the Spark driver's status store.
 
 A span owns the window of job ids ``[first, end)`` that the DAG scheduler
 handed out while it was open. Job ids come from one counter per
