@@ -3,10 +3,10 @@
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Run from the repository root. Each run is one fresh application, as a
-scheduled refresh is: it starts one Spark session on ``local[<cpus>]``,
-generates the workload's inputs from the seed under ``perfbench/.work/``,
-computes the DuckDB oracle results, and then times whole passes of the
-workload until ``--seconds`` have passed, at least one. The first pass
+scheduled refresh is: it generates the workload's inputs from the seed
+under ``perfbench/.work/``, starts one Spark session on ``local[<cpus>]``
+while DuckDB computes the oracle results, and then times whole passes of
+the workload until ``--seconds`` have passed, at least one. The first pass
 runs in a cold JVM, as every scheduled run does. Every pass's outputs are
 checked against DuckDB after the timed passes, and one JSON object is
 printed as the last line of standard output.
@@ -27,9 +27,9 @@ import shutil
 import signal
 import statistics
 import sys
-import threading
 import time
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -59,6 +59,8 @@ UNITS = {
     "output_mb": "MB",
     "overhead_s": "s",
 }
+
+
 def _cpus() -> int:
     try:
         return len(os.sched_getaffinity(0))
@@ -105,32 +107,23 @@ def _same_bytes(a: str, b: str) -> bool:
     return True
 
 
-class RssSampler(threading.Thread):
-    """Peak resident set size of one process, sampled from /proc."""
+class PeakRss:
+    """Peak resident set size of one process, from the kernel's high-water
+    mark, which ``reset`` sets back to the current resident set."""
 
-    def __init__(self, pid: int, period_s: float = 0.02):
-        super().__init__(daemon=True)
-        self.path = f"/proc/{pid}/status"
-        self.period_s = period_s
-        self.peak_kb = 0
-        self._done = threading.Event()
+    def __init__(self, pid: int):
+        self.pid = pid
 
-    def _rss_kb(self) -> int:
-        with open(self.path) as f:
+    def reset(self) -> None:
+        with open(f"/proc/{self.pid}/clear_refs", "w") as f:
+            f.write("5")
+
+    def mb(self) -> float:
+        with open(f"/proc/{self.pid}/status") as f:
             for line in f:
-                if line.startswith("VmRSS:"):
-                    return int(line.split()[1])
-        return 0
-
-    def run(self):
-        while not self._done.is_set():
-            self.peak_kb = max(self.peak_kb, self._rss_kb())
-            self._done.wait(self.period_s)
-
-    def stop(self) -> float:
-        self._done.set()
-        self.join()
-        return self.peak_kb / 1024
+                if line.startswith("VmHWM:"):
+                    return int(line.split()[1]) / 1024
+        raise RuntimeError(f"no VmHWM for process {self.pid}")
 
 
 def per_layer_names(workloads) -> list[str]:
@@ -152,7 +145,7 @@ def _unit(name: str) -> str:
 
 
 class _Pass:
-    """One timed pass of a workload: its result, wall time and task CPU."""
+    """One pass of a workload: its result, wall time and task CPU."""
 
     def __init__(self, wl, store, k: int):
         first = store.next_job_id()
@@ -162,62 +155,75 @@ class _Pass:
         self.task_cpu_s = store.window(first, store.next_job_id(), self.wall_s)["task_cpu_s"]
 
 
+def _attempt(wl, store, k: int) -> _Pass | None:
+    """One pass, or None if it raised."""
+    try:
+        return _Pass(wl, store, k)
+    except Exception:
+        traceback.print_exc(file=sys.stderr)
+        return None
+
+
+def _generate(wl, work: str) -> float:
+    """Generate the inputs ``SETUP_REPS`` times, require identical bytes,
+    and return the median generation time."""
+    gen_s = []
+    for r in range(SETUP_REPS):
+        d = os.path.join(work, f"inputs-{r}")
+        t = time.perf_counter()
+        wl.generate(d)
+        gen_s.append(time.perf_counter() - t)
+        if r and not _same_bytes(d, os.path.join(work, "inputs-0")):
+            raise RuntimeError("generator is not deterministic for this seed")
+    wl.in_dir = os.path.join(work, "inputs-0")
+    return statistics.median(gen_s)
+
+
 def run(args, work: str) -> dict:
     from spans import StatusStore, Tracer
     from workloads import WORKLOADS
 
     from glamira_end_to_end_data_pipeline_spark import get_spark
 
-    t = time.perf_counter()
-    spark = get_spark(app_name="perfbench")
-    session_s = time.perf_counter() - t
+    wl = WORKLOADS[args.workload](args.seed, work)
+    spark = None
     try:
+        gen_s = _generate(wl, work)
+        t = time.perf_counter()
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            oracle = pool.submit(wl.compute_expected)  # DuckDB runs while the JVM starts
+            spark = get_spark(app_name="perfbench")
+            oracle.result()
+        start_s = time.perf_counter() - t
         store = StatusStore(spark)
         tracer = Tracer(store, enabled=False)
-        wl = WORKLOADS[args.workload](spark, tracer, args.seed, work)
+        wl.attach(spark, tracer)
+        setup_s = gen_s + start_s
 
-        # generation is repeated: its median is the set-up figure, and the
-        # copies must agree byte for byte
-        gen_s = []
-        for r in range(SETUP_REPS):
-            d = os.path.join(work, f"inputs-{r}")
-            t = time.perf_counter()
-            wl.generate(d)
-            gen_s.append(time.perf_counter() - t)
-            if r and not _same_bytes(d, os.path.join(work, "inputs-0")):
-                raise RuntimeError("generator is not deterministic for this seed")
-        t = time.perf_counter()
-        wl.adopt(os.path.join(work, "inputs-0"))
-        wl.compute_expected()
-        oracle_s = time.perf_counter() - t
-        setup_s = session_s + statistics.median(gen_s) + oracle_s
-
-        passes, attempted, failed = [], 0, 0
-        rss = RssSampler(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
-        rss.start()
+        rss = PeakRss(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+        rss.reset()
         tracer.enabled = bool(args.trace)
-        t_run = time.perf_counter()
+        passes = []
+        t = time.perf_counter()
         # a traced run times one pass, the same first pass an untraced run times
-        while not attempted or (not args.trace and time.perf_counter() - t_run < args.seconds):
-            attempted += 1
-            try:
-                passes.append(_Pass(wl, store, attempted))
-            except Exception:
-                traceback.print_exc(file=sys.stderr)
-                failed += 1
-        if not passes:
-            raise RuntimeError("every pass failed")
-        peak_rss_mb = rss.stop()
+        while not passes or (not args.trace and time.perf_counter() - t < args.seconds):
+            passes.append(_attempt(wl, store, len(passes)))
+        peak_rss_mb = rss.mb()
         tracer.enabled = False
 
+        # outputs are checked after the timed window
+        failed = 0
         for p in passes:
-            bad = wl.check(p.result)
+            bad = ["the pass raised"] if p is None else wl.check(p.result)
             if bad:
                 print(f"{wl.name}: wrong output: {bad}", file=sys.stderr)
                 failed += 1
+        ok = [p for p in passes if p is not None]
+        if not ok:
+            raise RuntimeError("every pass failed")
 
         if args.trace:
-            values = {"trace.wall_s": passes[0].wall_s, "trace.overhead_s": tracer.overhead_s}
+            values = {"trace.wall_s": ok[0].wall_s, "trace.overhead_s": tracer.overhead_s}
             for name in per_layer_names(WORKLOADS):
                 span, counter = name.rsplit(".", 1)
                 if span != "trace":
@@ -226,29 +232,29 @@ def run(args, work: str) -> dict:
             _write_spans(tracer, args)
             metrics = {n: {"value": v, "unit": _unit(n)} for n, v in values.items()}
         else:
-            wall_s = statistics.median(p.wall_s for p in passes)
+            wall_s = statistics.median(p.wall_s for p in ok)
             values = {
                 "setup_s": setup_s,
                 "wall_s": wall_s,
                 "rows_per_s": wl.input_rows / wall_s,
-                "task_cpu_s": statistics.median(p.task_cpu_s for p in passes),
+                "task_cpu_s": statistics.median(p.task_cpu_s for p in ok),
                 "peak_rss_mb": peak_rss_mb,
             }
             metrics = {n: {"value": v, "unit": END_TO_END[n]} for n, v in values.items()}
         print(
-            f"{wl.name}: seed={args.seed} setup: session {session_s:.2f}s "
-            f"generate {statistics.median(gen_s):.2f}s oracle {oracle_s:.2f}s; "
-            f"passes {[round(p.wall_s, 3) for p in passes]}",
+            f"{wl.name}: seed={args.seed} setup: generate {gen_s:.2f}s "
+            f"session and oracle {start_s:.2f}s; passes {[round(p.wall_s, 3) for p in ok]}",
             file=sys.stderr,
         )
         return {
             "correct": failed == 0,
-            "attempted": attempted,
+            "attempted": len(passes),
             "failed": failed,
             "metrics": metrics,
         }
     finally:
-        _stop(spark)
+        if spark is not None:
+            _stop(spark)
         shutil.rmtree(work, ignore_errors=True)
 
 

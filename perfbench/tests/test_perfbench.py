@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import gen
 import numpy as np
@@ -31,7 +33,7 @@ def _tree_bytes(d):
 @pytest.mark.parametrize("name", sorted(WORKLOADS))
 def test_generator_same_seed_same_bytes(tmp_path, name):
     for sub, seed in (("a", 5), ("b", 5), ("c", 6)):
-        WORKLOADS[name](None, None, seed, str(tmp_path)).generate(str(tmp_path / sub))
+        WORKLOADS[name](seed, str(tmp_path)).generate(str(tmp_path / sub))
     a, b, c = (_tree_bytes(tmp_path / s) for s in "abc")
     assert a and a == b
     assert a != c
@@ -84,6 +86,28 @@ def test_printed_names_match_benchmark_json():
     assert [m["name"] for m in spec["per_layer"]] == names
     assert all(m["unit"] == run._unit(m["name"]) for m in spec["per_layer"])
     assert len(names) <= 128 and all(len(n) <= 64 for n in names)
+
+
+def test_peak_rss_reset_drops_an_earlier_peak():
+    child = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import time; x = bytearray(64 << 20); x[::4096] = b'1' * len(x[::4096]);"
+            " del x; print('ok', flush=True); time.sleep(60)",
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert child.stdout.readline().strip() == "ok"
+        rss = run.PeakRss(child.pid)
+        high = rss.mb()
+        rss.reset()
+        assert high > rss.mb() + 48
+    finally:
+        child.kill()
+        child.wait(timeout=10)
 
 
 @pytest.fixture(scope="module")

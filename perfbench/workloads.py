@@ -45,24 +45,25 @@ class Workload:
     # model or entry name -> registry entry whose oracle SQL gives its rows
     oracles: dict[str, str] = {}
 
-    def __init__(self, spark, tracer: Tracer, seed: int, work: str):
-        self.spark = spark
-        self.tracer = tracer
+    def __init__(self, seed: int, work: str):
         self.seed = seed
         self.work = work
-        self.in_dir = ""
+        self.in_dir = ""  # the generated inputs the passes read
         self.expected = {}
+        self.spark = None
+        self.tracer: Tracer | None = None
 
     def generate(self, in_dir: str) -> None:
         raise NotImplementedError
 
-    def adopt(self, in_dir: str) -> None:
-        """Take the generated tables in ``in_dir`` as the inputs."""
-        self.in_dir = in_dir
+    def attach(self, spark, tracer: Tracer) -> None:
+        """Take the session the passes run in."""
+        self.spark = spark
+        self.tracer = tracer
 
     def compute_expected(self) -> None:
         """Oracle results for the inputs. Touches DuckDB only, so it can
-        run on a thread beside Spark work."""
+        run on a thread while the Spark session starts."""
         con = duckdb.connect()
         try:
             _register(con, self.in_dir)
@@ -123,9 +124,9 @@ class StarFullRefresh(Workload):
     def generate(self, in_dir):
         gen.write_event_chunks(self.seed, self.input_rows, os.path.join(in_dir, "events"))
 
-    def adopt(self, in_dir):
-        super().adopt(in_dir)
-        self.chunks = sorted(glob.glob(os.path.join(in_dir, "events", "*.parquet")))
+    def attach(self, spark, tracer):
+        super().attach(spark, tracer)
+        self.chunks = sorted(glob.glob(os.path.join(self.in_dir, "events", "*.parquet")))
         self.schema = self.spark.read.parquet(self.chunks[0]).schema
 
     def _load(self, it: str) -> None:
