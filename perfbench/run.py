@@ -130,12 +130,14 @@ def per_layer_names(workloads) -> list[str]:
     """Every per-layer metric name, in a fixed order."""
     from spans import COUNTERS
 
+    # Under adaptive execution every stage runs as a job of its own, so
+    # ``stages`` equals ``jobs`` in every span; it stays in the spans file.
     names = [
         f"{s}.{c}"
         for w in workloads.values()
         for s in w.spans
         for c in COUNTERS
-        if (s, c) not in w.zero
+        if c != "stages" and (s, c) not in w.zero
     ]
     return names + ["trace.wall_s", "trace.overhead_s"]
 

@@ -13,6 +13,8 @@ import glob
 import os
 import shutil
 
+import numpy as np
+
 import duckdb
 import gen
 import pyarrow.parquet as pq
@@ -25,17 +27,6 @@ from glamira_end_to_end_data_pipeline_spark.streaming import run_incremental_loa
 from glamira_end_to_end_data_pipeline_spark.testing import compare_frames, duckdb_oracle
 
 
-def _register(con, in_dir: str) -> None:
-    """DuckDB views over whichever generated tables ``in_dir`` holds."""
-    for table in ("events", "documents", "embeddings"):
-        path = os.path.join(in_dir, f"{table}.parquet")
-        if not os.path.exists(path):
-            path = os.path.join(in_dir, table, "*.parquet")
-            if not glob.glob(path):
-                continue
-        con.execute(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
-
-
 class Workload:
     name = ""
     input_rows = 0
@@ -44,6 +35,8 @@ class Workload:
     zero: frozenset[tuple[str, str]] = frozenset()
     # model or entry name -> registry entry whose oracle SQL gives its rows
     oracles: dict[str, str] = {}
+    # table -> its generated files under the input directory
+    views: dict[str, str] = {}
 
     def __init__(self, seed: int, work: str):
         self.seed = seed
@@ -66,7 +59,9 @@ class Workload:
         run on a thread while the Spark session starts."""
         con = duckdb.connect()
         try:
-            _register(con, self.in_dir)
+            for table, files in self.views.items():
+                path = os.path.join(self.in_dir, files)
+                con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
             self.expected = {k: duckdb_oracle(con, ORACLES[v]) for k, v in self.oracles.items()}
         finally:
             con.close()
@@ -77,19 +72,22 @@ class Workload:
     def check(self, result) -> list[str]:
         raise NotImplementedError
 
-    def _compare(self, name: str, pdf) -> list[str]:
-        r = compare_frames(name, pdf, self.expected[name])
+    def _compare(self, name: str, pdf, oracle: str = "") -> list[str]:
+        r = compare_frames(name, pdf, self.expected[oracle or name])
         return [] if r.ok else [f"{name}: {r.detail} ({r.spark_rows} vs {r.oracle_rows} rows)"]
 
 
 class StarFullRefresh(Workload):
-    """The reference's ELT path. Export chunks land one at a time and the
-    incremental loader appends each to the warehouse table. Then the raw
-    tables and every dbt model are rebuilt in dependency order, each
-    written as Parquet and read back like a dbt ``table``."""
+    """The reference's ELT path. Export chunks land in ``n_loads`` rounds
+    and after each round the incremental loader appends what has landed to
+    the warehouse table. Then the raw tables and every dbt model are rebuilt
+    in dependency order, each written as Parquet and read back like a dbt
+    ``table``, and the dbt incremental fact entry runs over the loaded
+    table."""
 
     name = "star_full_refresh"
-    input_rows = 50_000
+    input_rows = 200_000
+    n_loads = 5
     raw = ("summary", "ip_locations", "product_details")
     model_names = (
         "stg_summary",
@@ -101,16 +99,26 @@ class StarFullRefresh(Workload):
         "dim_date",
         "fact_sales_order",
     )
+    entry = "star_fact_sales_order_incremental"
     spans = (
         ("streaming.load",)
         + tuple(f"raw.{t}" for t in raw)
         + tuple(f"models.{m}" for m in model_names)
+        + (f"entry.{entry}.construct", f"entry.{entry}.execute")
     )
-    # map-only steps shuffle nothing
+    # map-only steps shuffle nothing, the fact model broadcasts every
+    # dimension at this size, and collecting the entry's result writes nothing
     zero = frozenset(
         (s, "shuffle_mb")
-        for s in ("raw.summary", "models.stg_summary", "models.dim_product", "models.dim_date")
-    )
+        for s in (
+            "raw.summary",
+            "models.stg_summary",
+            "models.dim_product",
+            "models.dim_date",
+            "models.fact_sales_order",
+            f"entry.{entry}.execute",
+        )
+    ) | {(f"entry.{entry}.execute", "output_mb")}
     oracles = {
         "stg_summary_date_range": "star_date_range",
         "dim_customer": "star_dim_customer",
@@ -120,26 +128,29 @@ class StarFullRefresh(Workload):
         "dim_date": "star_dim_date",
         "fact_sales_order": "star_fact_sales_order",
     }
+    views = {"events": "events/*.parquet"}
 
     def generate(self, in_dir):
         gen.write_event_chunks(self.seed, self.input_rows, os.path.join(in_dir, "events"))
 
     def attach(self, spark, tracer):
         super().attach(spark, tracer)
-        self.chunks = sorted(glob.glob(os.path.join(self.in_dir, "events", "*.parquet")))
-        self.schema = self.spark.read.parquet(self.chunks[0]).schema
+        chunks = sorted(glob.glob(os.path.join(self.in_dir, "events", "*.parquet")))
+        self.rounds = [list(r) for r in np.array_split(chunks, self.n_loads)]
+        self.schema = self.spark.read.parquet(chunks[0]).schema
 
     def _load(self, it: str) -> None:
         src, target, audit, ckpt = (
             os.path.join(it, d) for d in ("landing", "events", "audit", "checkpoint")
         )
         os.makedirs(src)
-        for chunk in self.chunks:
-            # land atomically, as an object finalize does: the file source
-            # skips dot-files, so the rename is what makes the chunk visible
-            tmp = os.path.join(src, ".landing")
-            shutil.copyfile(chunk, tmp)
-            os.replace(tmp, os.path.join(src, os.path.basename(chunk)))
+        for chunks in self.rounds:
+            for chunk in chunks:
+                # land atomically, as an object finalize does: the file source
+                # skips dot-files, so the rename is what makes the chunk visible
+                tmp = os.path.join(src, ".landing")
+                shutil.copyfile(chunk, tmp)
+                os.replace(tmp, os.path.join(src, os.path.basename(chunk)))
             with self.tracer.span("streaming.load"):
                 run_incremental_load_once(
                     self.spark, src, target, audit, ckpt, self.schema, "events"
@@ -173,21 +184,28 @@ class StarFullRefresh(Workload):
             models.fact_sales_order(stg, product, customer, location, date, session),
             it,
         )
-        return it
+        with self.tracer.span(f"entry.{self.entry}.construct"):
+            df = QUERIES[self.entry](self.spark, it)
+        with self.tracer.span(f"entry.{self.entry}.execute"):
+            incremental = df.toPandas()
+        return it, incremental
 
-    def check(self, it):
-        """Loaded rows and audit rows, then each model's files against its
-        oracle. Files are read with pyarrow, so the check runs no Spark job."""
+    def check(self, result):
+        """Loaded rows and audit rows, then each model's files and the
+        incremental fact against their oracles. Files are read with
+        pyarrow, so the check runs no Spark job."""
+        it, incremental = result
         n = self.input_rows
         loaded = pq.read_table(os.path.join(it, "events")).num_rows
         audit = pq.read_table(os.path.join(it, "audit")).column("row_count").to_pylist()
         bad = [] if loaded == n else [f"loaded {loaded} rows of {n}"]
-        if len(audit) != len(self.chunks) or sum(audit) != n:
-            bad.append(f"audit rows {audit} do not record {len(self.chunks)} loads of {n} rows")
+        if len(audit) != self.n_loads or sum(audit) != n:
+            bad.append(f"audit rows {audit} do not record {self.n_loads} loads of {n} rows")
         for model in self.oracles:
             pdf = pq.read_table(os.path.join(it, "models", model)).to_pandas()
             bad += self._compare(model, pdf)
-        return bad
+        # the incremental fact must equal the full rebuild (FACT_ORACLE_SQL)
+        return bad + self._compare(self.entry, incremental, "fact_sales_order")
 
 
 class CurationOps(Workload):
@@ -201,6 +219,7 @@ class CurationOps(Workload):
     spans = tuple(f"entry.{e}.{p}" for e in entries for p in ("construct", "execute"))
     zero = frozenset((s, "output_mb") for s in spans)  # the entries write nothing
     oracles = {e: e for e in entries}
+    views = {t: f"{t}.parquet" for t in ("documents", "embeddings")}
 
     def generate(self, in_dir):
         gen.write_corpus(self.seed, self.n_docs, self.n_vecs, in_dir)
