@@ -13,10 +13,9 @@ import glob
 import os
 import shutil
 
-import numpy as np
-
 import duckdb
 import gen
+import numpy as np
 import pyarrow.parquet as pq
 from spans import Tracer
 
