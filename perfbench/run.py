@@ -4,7 +4,7 @@
 
 Run from the repository root. Each run is one fresh application, as a
 scheduled refresh is: it generates the workload's inputs from the seed
-under ``perfbench/.work/``, starts one Spark session on ``local[<cpus>]``
+under ``perfbench/.work/``, starts one Spark session on ``local[<cpus> - 1]``
 while DuckDB computes the oracle results, and then times whole passes of
 the workload until ``--seconds`` have passed, at least one. The first pass
 runs in a cold JVM, as every scheduled run does. Every pass's outputs are
@@ -68,6 +68,16 @@ def _cpus() -> int:
         return os.cpu_count() or 1
 
 
+def _task_slots() -> int:
+    """Task threads for ``local[n]``: one CPU fewer than the process may
+    use. The driver thread, the JIT compilers and the garbage collector
+    run beside the tasks; with a task thread on every CPU, threads waited
+    for a CPU a quarter of a cold ``star_full_refresh`` pass (the kernel's
+    CPU pressure), against a sixth with one CPU left free, at the same
+    wall time."""
+    return max(1, _cpus() - 1)
+
+
 def _environment(work: str) -> None:
     """Size Spark for the machine and keep the files it writes in ``work``.
     Must run before pyspark starts the JVM."""
@@ -75,7 +85,7 @@ def _environment(work: str) -> None:
     os.makedirs(tmp)
     os.environ.update(
         {
-            "SPARK_GRAFT_CPUS": str(_cpus()),
+            "SPARK_GRAFT_CPUS": str(_task_slots()),
             "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEM,
             "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
             "TMPDIR": tmp,
