@@ -61,13 +61,6 @@ UNITS = {
 }
 
 
-def _cpus() -> int:
-    try:
-        return len(os.sched_getaffinity(0))
-    except AttributeError:
-        return os.cpu_count() or 1
-
-
 def _task_slots() -> int:
     """Task threads for ``local[n]``: one CPU fewer than the process may
     use. The driver thread, the JIT compilers and the garbage collector
@@ -75,7 +68,11 @@ def _task_slots() -> int:
     for a CPU a quarter of a cold ``star_full_refresh`` pass (the kernel's
     CPU pressure), against a sixth with one CPU left free, at the same
     wall time."""
-    return max(1, _cpus() - 1)
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:
+        cpus = os.cpu_count() or 1
+    return max(1, cpus - 1)
 
 
 def _environment(work: str) -> None:
